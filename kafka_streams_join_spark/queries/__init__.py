@@ -18,7 +18,6 @@ from __future__ import annotations
 import glob
 import json
 import os
-import re
 
 from .registry import ORACLES, QUERIES, register
 
@@ -135,9 +134,7 @@ def _driver_green() -> set[str]:
     hash_match, or a recorded rows-only run for queries that are STILL
     oracle-less (the strongest signal they can ever get). A query that has
     since gained an oracle is deliberately NOT green on its old rows-only
-    record — it re-queues for a hash-certified driver row. Reworked
-    queries (``_RECERTIFY_FROM_ROUND``) only count rows from the rework
-    round onward."""
+    record — it re-queues for a hash-certified driver row."""
     green: set[str] = set()
     for path in sorted(glob.glob(os.path.join(_REPO_ROOT, "CORRECTNESS_r*.json"))):
         try:
@@ -145,11 +142,8 @@ def _driver_green() -> set[str]:
                 rows = json.load(f)
         except (OSError, ValueError):
             continue
-        rnd = _round_of(path)
         for name, row in rows.items():
             if not isinstance(row, dict):
-                continue
-            if rnd < _RECERTIFY_FROM_ROUND.get(name, 0):
                 continue
             if row.get("hash_match") is True:
                 green.add(name)
@@ -160,55 +154,6 @@ def _driver_green() -> set[str]:
             ):
                 green.add(name)
     return green
-
-
-# Materially reworked queries: a driver-green row only counts if it was
-# recorded at or after the round the rework landed — older rows certify an
-# implementation that no longer exists. SELF-CLEARING: once the named
-# round's sweep writes a fresh green row, the query sorts back into the
-# certified tail with no manual cleanup (entries become dead weight, never
-# wrong, and can be pruned at leisure).
-_RECERTIFY_FROM_ROUND = {
-    # (rounds 4-9 entries pruned after their re-certification — every
-    # retired query had a fresh hash-green row in CORRECTNESS_r06..r09;
-    # see git history for the lists)
-    # round-10 fix: the DuckDB oracle's 5-level chained list-lambda CTE
-    # pyramid was nondeterministic on DuckDB 1.0.0 (13 wrong + 3 INT128-
-    # overflow crashes per 100 runs — the r9 board's one red row, with the
-    # Spark side provably correct). Rewritten relationally (unnest + GROUP
-    # BY per Haar level), 100/100 stress-stable; this entry forces a fresh
-    # hash-certified driver row against the stable oracle.
-    "events_wavelet_energy": 10,
-    # round-12 graph-family rework: the shared canonical basket fan-out
-    # (collect_set + map-side pair explode) replaced the basket self-join
-    # in every edge builder, and triangle counting / local clustering
-    # moved to the adjacency-array edge iterator (no wedge frame).
-    # Outputs verified byte-identical at 3 SFs; these entries force fresh
-    # driver rows against the new plans.
-    "graph_pagerank_parts": 12,
-    "graph_degree_distribution": 12,
-    "graph_triangle_count": 12,
-    "graph_common_neighbors": 12,
-    "graph_kcore_peel": 12,
-    "graph_label_propagation": 12,
-    "graph_jaccard_neighbors": 12,
-    "graph_local_clustering": 12,
-    "graph_assortativity": 12,
-    "graph_bfs_hops": 12,
-    "graph_modularity": 12,
-    # round-12 ADVICE fixes: Gini widened the doubled-rank product to
-    # DECIMAL(38,0) inside the sum (Spark-side only, same results);
-    # Theil-Sen now LEFT-joins the day-count base so single-day types
-    # report n_pairs=0 / NULL slope instead of vanishing (oracle changed
-    # to match; 25-rep stress-stable).
-    "orders_gini_revenue": 12,
-    "events_theilsen_slope": 12,
-}
-
-
-def _round_of(path: str) -> int:
-    m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-    return int(m.group(1)) if m else 0
 
 
 _green = _driver_green()

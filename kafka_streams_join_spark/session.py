@@ -14,6 +14,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+STATE_STORE_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
 
 
 def _kafka_connector_coordinate() -> str:
@@ -48,9 +51,9 @@ def get_spark(
     to ``local[$SPARK_GRAFT_CPUS]``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # Python workers (incl. the transformWithStateInPandas driver worker,
-    # which unpickles StatefulProcessor classes by module reference) must be
-    # able to import this package. Locally that means the repo root on
+    # Python workers (incl. those running the applyInPandasWithState
+    # monitors, whose state functions unpickle by module reference) must
+    # be able to import this package. Locally that means the repo root on
     # PYTHONPATH before the JVM forks workers; on a cluster the same thing
     # is done by shipping a wheel via --py-files.
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -91,15 +94,10 @@ def get_spark(
         # HDFS-backed provider on the interval join in every adjacent
         # pair (9312/8272/8792 vs 6156/7697/7731 rows/s) and on the
         # timeout join 2 of 3 (best 8435 vs 7734). Config-only — emission
-        # semantics unchanged; parameterised so a deployment can override.
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            os.environ.get(
-                "SPARK_GRAFT_STATESTORE_PROVIDER",
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            ),
-        )
+        # semantics unchanged; ``extra_conf`` overrides it. A checkpoint
+        # fixes its provider when the query first starts, so a change
+        # applies only to new checkpoints.
+        .config("spark.sql.streaming.stateStore.providerClass", STATE_STORE_PROVIDER)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

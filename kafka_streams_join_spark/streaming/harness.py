@@ -46,18 +46,22 @@ class FileStream:
 
     def add_batch(self, rows: list[dict]) -> None:
         """One file == one micro-batch (maxFilesPerTrigger=1)."""
-        path = os.path.join(self.dir, f"batch-{self._n:05d}.json")
-        tmp = path + ".tmp"
+        name = f"batch-{self._n:05d}.json"
+        # The source's listing skips names starting with "." or "_", so the
+        # partial file stays invisible until the rename publishes it.
+        tmp = os.path.join(self.dir, f".{name}.tmp")
         with open(tmp, "w") as f:
             for r in rows:
                 f.write(json.dumps(r) + "\n")
-        os.rename(tmp, path)  # atomic: the source never sees partial files
         # FileStreamSource orders files by modification time; same-ms writes
         # tie arbitrarily, which can reorder micro-batches and turn earlier
         # batches into dropped late data. Strictly increasing mtimes pin the
-        # order to batch number.
+        # order to batch number. Set before the rename, which keeps it: a
+        # listing must never see the real, newer mtime, or every later file
+        # is dropped as older than maxFileAge.
         mtime = 1_700_000_000 + self._n
-        os.utime(path, (mtime, mtime))
+        os.utime(tmp, (mtime, mtime))
+        os.rename(tmp, os.path.join(self.dir, name))
         self._n += 1
 
     def df(self) -> DataFrame:
@@ -79,14 +83,6 @@ def start_memory_sink(
             "checkpointLocation", os.path.join(checkpoint_root, sink)
         )
     return writer.start(), sink
-
-
-def process_available(query: StreamingQuery, timeout_s: float = 60.0) -> None:
-    """Run the query until all currently-available input is consumed."""
-    deadline = time.time() + timeout_s
-    query.processAllAvailable()
-    if time.time() > deadline:  # pragma: no cover — processAllAvailable blocks
-        raise TimeoutError(f"streaming query {query.name} did not drain in {timeout_s}s")
 
 
 def _progress_dict(p) -> dict:

@@ -5,6 +5,10 @@ driver-green row in any checked-in CORRECTNESS_r*.json sort first."""
 
 from __future__ import annotations
 
+import ast
+import os
+
+from kafka_streams_join_spark import queries
 from kafka_streams_join_spark.queries import ORACLES, QUERIES
 from kafka_streams_join_spark.queries import _driver_green
 
@@ -45,7 +49,7 @@ def test_sweep_window_covers_unproven_surface():
 
 def test_unproven_queue_fits_one_sweep():
     """Queue-hygiene invariant (VERDICT r6 task 5): the unproven queue —
-    new registrations plus _RECERTIFY_FROM_ROUND re-queues — must fit in
+    new registrations plus queries that gained an oracle — must fit in
     ONE driver sweep, or this round's sweep cannot close the
     certification queue and uncertified queries silently carry over.
     Checked as a hard bound so over-registering in a round fails pytest
@@ -68,3 +72,30 @@ def test_driver_green_reflects_recorded_results():
     # failed r01 on oracle result types, fixed + re-swept green in r02
     assert "sessionize_events" in green
     assert "scalar_math_funcs" in green
+
+
+def _siblings_imported_by(path: str) -> set[str]:
+    """Names of the modules that the module at ``path`` imports relatively
+    from its own package (``from . import x``, ``from .x import y``)."""
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    out: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.level == 1:
+            if node.module:
+                out.add(node.module.split(".")[0])
+            else:
+                out.update(alias.name for alias in node.names)
+    return out
+
+
+def test_every_query_module_is_imported():
+    """A ``queries/*.py`` module that neither the package nor a sibling
+    imports registers nothing and runs nowhere: it is dead code."""
+    root = os.path.dirname(queries.__file__)
+    modules = {f[:-3] for f in os.listdir(root) if f.endswith(".py")} - {"__init__"}
+    imported: set[str] = set()
+    for f in sorted(os.listdir(root)):
+        if f.endswith(".py"):
+            imported |= _siblings_imported_by(os.path.join(root, f)) - {f[:-3]}
+    assert sorted(modules - imported) == []
